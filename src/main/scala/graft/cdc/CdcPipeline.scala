@@ -3,13 +3,15 @@ package graft.cdc
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
+import scala.util.Try
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
-/** End-to-end CDC dataflow assembly (SURVEY.md §3.2 trace): source scan →
-  * pushed pk filter → typed map (unmarshall + diff + envelope + routing) →
-  * suppression → sinks.
+/** End-to-end CDC dataflow assembly (SURVEY.md §3.2 trace): source lines →
+  * one typed map (parse + pk filter + unmarshall + diff + envelope +
+  * suppression + routing) → sinks.
   *
   * The pipeline is NARROW — no shuffle anywhere: per-record logic is
   * partition-local, so on a 1000-executor cluster each task streams its input
@@ -125,54 +127,52 @@ object CdcPipeline {
     lines.flatMap(l => RecordProcessor.processLine(l, cfg, rules))
   }
 
-  /** Streaming [[CdcRecord]]s through the DSv2 `graft-cdc` source — the
-    * shared front end of the stock [[stream]] pipeline and [[CdcApp]] custom
-    * transforms. Two filter layers, per the source's safety contract:
-    * source-level pk PRUNING via the `pkFilters` reader option (Catalyst
-    * does not push filters into streaming DSv2 scans; the option is the
-    * reference's deploy-time event-source-mapping filter), and the EXACT
-    * predicate re-applied in the plan over the source's pk text (residual
-    * authority — correctness never rests on the source's pruning; pk-text
-    * semantics match the fused `processLine`, including non-S-typed pks).
-    * The `hasDynamodb` marker makes the envelope→record bridge lossless, so
-    * stream and batch agree on the reference's emit-on-empty-dynamodb quirk.
+  /** Streaming raw lines through the DSv2 `graft-cdc` line source: new
+    * files are the stream, split by byte range and packed into at most one
+    * task per slot. `cfg.pkFilters` rides the `pkFilters` reader option,
+    * where it only prunes lines that cannot match (the reference's
+    * deploy-time event-source-mapping filter); the exact pk check is the
+    * consumer's. `maxFilesPerTrigger` bounds each micro-batch (the source's
+    * ReadLimit.maxFiles contract), so a backlog drains as a SEQUENCE of
+    * bounded triggers instead of one giant cold batch — honored under
+    * Trigger.AvailableNow too.
+    */
+  private def streamLines(spark: SparkSession, inputDir: String, cfg: CdcConfig,
+      maxFilesPerTrigger: Int): Dataset[String] = {
+    import spark.implicits._
+    val reader = spark.readStream.format("graft-cdc")
+    if (cfg.pkFilters.nonEmpty) reader.option("pkFilters", PkFilter.toOption(cfg.pkFilters))
+    if (maxFilesPerTrigger != Int.MaxValue)
+      reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
+    reader.load(inputDir).as[String]
+  }
+
+  /** Streaming [[CdcRecord]]s for [[CdcApp]] custom transforms: the
+    * [[streamLines]] line stream, [[RecordProcessor.parseRecord]], then the
+    * EXACT pk residual over the pk text of `Keys` (an S-typed pk matches on
+    * its raw text, other tags on their JSON text, as in `processLine`). A
+    * record whose `Keys` fail to unmarshall drops (OP-3), filter or not.
     */
   def streamRecords(spark: SparkSession, inputDir: String, cfg: CdcConfig,
       maxFilesPerTrigger: Int = Int.MaxValue): Dataset[CdcRecord] = {
     import spark.implicits._
-    val reader = spark.readStream.format("graft-cdc")
-    if (cfg.pkFilters.nonEmpty)
-      reader.option("pkFilters",
-        graft.attr.Json.JArr(cfg.pkFilters.toVector.map(graft.attr.Json.JStr)).print)
-    // admission control (the source's ReadLimit.maxFiles contract,
-    // CdcSource.getDefaultReadLimit): bounds each micro-batch so a backlog
-    // drains as a SEQUENCE of bounded triggers instead of one giant cold
-    // batch — steady-state latency is per-trigger, honored under
-    // Trigger.AvailableNow too
-    if (maxFilesPerTrigger != Int.MaxValue)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-    val raw = reader.load(inputDir)
-    val filtered =
-      if (cfg.pkFilters.isEmpty) raw
-      else raw.filter(col("pk").isNotNull && PkFilter.toColumn(col("pk"), cfg.pkFilters))
-    filtered
-      .select(col("eventID"), col("eventName"), col("sizeBytes"),
-        col("keysJson"), col("newImageJson"), col("oldImageJson"), col("hasDynamodb"))
-      .as[(Option[String], Option[String], Option[Long], Option[String], Option[String], Option[String], Boolean)]
-      .map { case (id, op, size, k, n, o, hasDdb) =>
-        // the marker distinguishes absent vs present-but-empty `dynamodb`
-        // ({}): the reference emits on the latter (truthy guard), so the
-        // streaming path must reconstruct Some(empty part), not None
-        val ddb = if (hasDdb) Some(CdcStreamPart(size, k, n, o)) else None
-        CdcRecord(id, op, ddb)
-      }
+    val rules = PkFilter.compile(cfg.pkFilters)
+    streamLines(spark, inputDir, cfg, maxFilesPerTrigger).flatMap { line =>
+      Try(RecordProcessor.parseRecord(line).filter { r =>
+        // pkText throws on malformed Keys: the Try drops the record
+        val pk = r.dynamodb.flatMap(_.Keys).flatMap(graft.sources.CdcSource.pkText)
+        rules.isEmpty || pk.exists(PkFilter.matches(_, rules))
+      }).toOption.flatten
+    }
   }
 
-  /** Streaming pipeline: [[streamRecords]] (DSv2 micro-batch source with
-    * source-level pk pruning + byte-range splits) → per-record program →
-    * sink that (a) writes claim-check blobs task-side and (b) appends bus
-    * rows as parquet — exactly-once per micro-batch via checkpointing
-    * (stronger than the reference's at-least-once, SURVEY §4.2).
+  /** Streaming pipeline: [[streamLines]] (DSv2 micro-batch line source with
+    * `pkFilters` pruning, byte-range splits packed one task per slot) → the
+    * fused per-record program [[RecordProcessor.processLine]] (one parse per
+    * record; exact pk filter) → sink that (a) writes claim-check blobs
+    * task-side and (b) appends bus rows as parquet, one file per task —
+    * exactly-once per micro-batch via checkpointing (stronger than the
+    * reference's at-least-once, SURVEY §4.2).
     */
   def stream(
       spark: SparkSession,
@@ -182,18 +182,16 @@ object CdcPipeline {
       cfg: CdcConfig,
       maxFilesPerTrigger: Int = Int.MaxValue): DataStreamWriter[BusEvent] = {
     import spark.implicits._
-    val proc = streamRecords(spark, inputDir, cfg, maxFilesPerTrigger)
-      .flatMap(r => RecordProcessor.processSafe(r, cfg))
+    val rules = PkFilter.compile(cfg.pkFilters)
     val blobDir = cfg.blobDir
 
-    proc
-      .map(p => (p.event, p.blob))
+    streamLines(spark, inputDir, cfg, maxFilesPerTrigger)
       .mapPartitions { it =>
         // Task-local claim-check writes (OP-10/11): the blob store is a
         // directory; each task writes only its own records' blobs.
-        it.map { case (event, blob) =>
-          blob.foreach(b => writeBlob(blobDir, b))
-          RecordProcessor.toBusEvent(event, cfg)
+        it.flatMap(RecordProcessor.processLine(_, cfg, rules)).map { p =>
+          p.blob.foreach(b => writeBlob(blobDir, b))
+          RecordProcessor.toBusEvent(p.event, cfg)
         }
       }
       .writeStream

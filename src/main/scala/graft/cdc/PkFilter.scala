@@ -3,6 +3,8 @@ package graft.cdc
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.attr.{Json, JsonParser}
+
 /** Source-level pk predicate compiler (OP-2) — a behavioral port of the
   * filter-rule construction at `/root/reference/lib/constructs/dynamo.ts:157-191`:
   *
@@ -60,4 +62,19 @@ object PkFilter {
       case Eq(v)     => pk == v
       case Prefix(p) => pk.startsWith(p)
     }
+
+  /** The `graft-cdc` reader's `pkFilters` option: the patterns as one JSON
+    * array of strings, parsed back into compiled rules by [[fromOption]].
+    */
+  def toOption(patterns: Seq[String]): String =
+    Json.JArr(patterns.toVector.map(Json.JStr)).print
+
+  def fromOption(option: String): Seq[Rule] = JsonParser.parse(option) match {
+    case Json.JArr(items) =>
+      items.map {
+        case Json.JStr(pat) => compileOne(pat)
+        case other => throw new IllegalArgumentException(s"pkFilters entries must be strings: $other")
+      }
+    case other => throw new IllegalArgumentException(s"pkFilters must be a JSON array: $other")
+  }
 }

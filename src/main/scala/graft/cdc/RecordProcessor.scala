@@ -72,10 +72,7 @@ object RecordProcessor {
     if (operation == "MODIFY" && d.attributesChanged.isEmpty) return None
 
     def keyVal(k: String): Option[AttrVal] = keys.flatMap(_.get(k))
-    def keyStr(k: String): Option[String] = keyVal(k).map {
-      case AttrVal.SVal(s) => s
-      case other           => AttrVal.printJson(other)
-    }
+    def keyStr(k: String): Option[String] = keyVal(k).map(keyText)
     // JSON encoding of the raw key value (strings quoted, numbers bare) —
     // what JSON.stringify sees for the untyped `keys?.pk` assignment
     def keyJson(k: String): Option[String] = keyVal(k).map(AttrVal.printJson)
@@ -111,6 +108,14 @@ object RecordProcessor {
     Some(Processed(event, blob))
   }
 
+  /** A key's display text, which pk filters match: an S value raw, any
+    * other tag as its JSON text.
+    */
+  def keyText(v: AttrVal): String = v match {
+    case AttrVal.SVal(s) => s
+    case other           => AttrVal.printJson(other)
+  }
+
   /** Error-isolated variant (OP-3): malformed records are logged-and-dropped
     * like the reference's per-record `try/catch`
     * (`dynamo-stream-handler.ts:20-25`), not task-failing.
@@ -122,9 +127,14 @@ object RecordProcessor {
     }
 
   /** Fused line path: parse ONCE, unmarshall straight from the JSON tree,
-    * evaluate the pk filter on the parsed keys, and run the record program —
-    * no intermediate image strings (the [[CdcRecord]] path re-prints and
-    * re-parses each image; this one doesn't).
+    * evaluate the pk filter on the parsed keys, and run the record program
+    * with no intermediate image strings. Every line input (batch, backfill,
+    * Kafka, and the `graft-cdc` line source under `CdcPipeline.stream`)
+    * enters here, so this is the exact pk authority: the pk text is the
+    * un-normalized pk (an S-typed pk raw, other tags as their JSON text, as
+    * `parseRecord` → `CdcSource.pkText` reads it), and a record without a pk
+    * fails any filter. Events are byte-equal to [[parseRecord]] →
+    * [[processSafe]] (ProcessLineFuzzSpec's differential property).
     */
   def processLine(line: String, cfg: CdcConfig, rules: Seq[PkFilter.Rule]): Option[Processed] =
     Try {
@@ -135,15 +145,14 @@ object RecordProcessor {
           case (Some(op), Some(id), Some(ddb)) =>
             def unm(field: String): Option[MVal] =
               ddb.asMap.get(field).map(j => normalize(AttrCodec.unmarshallItem(j), cfg))
-            val keys = unm("Keys")
-            val pkOk = rules.isEmpty || keys.flatMap(_.get("pk")).exists {
-              case AttrVal.SVal(s) => PkFilter.matches(s, rules)
-              case other           => PkFilter.matches(AttrVal.printJson(other), rules)
-            }
+            val keys = ddb.asMap.get("Keys").map(j => AttrCodec.unmarshallItem(j))
+            val pkOk = rules.isEmpty ||
+              keys.flatMap(_.get("pk")).map(keyText).exists(PkFilter.matches(_, rules))
             if (!pkOk) None
             else {
               val size = ddb.asMap.get("SizeBytes").collect { case Json.JNum(n) => n.toLong }
-              processImages(op, id, size, keys, unm("NewImage"), unm("OldImage"), cfg)
+              processImages(op, id, size, keys.map(normalize(_, cfg)),
+                unm("NewImage"), unm("OldImage"), cfg)
             }
           case _ => None
         }

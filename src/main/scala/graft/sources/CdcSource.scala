@@ -2,6 +2,8 @@ package graft.sources
 
 import java.util
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -9,36 +11,38 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, ReadLimit, ReadMaxFiles, SupportsTriggerAvailableNow, Offset => StreamingOffset}
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, StringStartsWith}
+import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.attr.{AttrCodec, AttrVal}
-import graft.cdc.RecordProcessor
+import graft.attr.AttrCodec
+import graft.cdc.{PkFilter, RecordProcessor}
 
-/** DataSource V2 connector for stream-record JSON-line directories:
-  * `spark.read.format("graft-cdc").load(dir)` — the engine's OP-1 source as
-  * a first-class Spark table with pk filter pushdown (the DSv2 analogue of
-  * DynamoDB's event-source-mapping filter running before the handler,
-  * `/root/reference/lib/constructs/dynamo.ts:160-168`).
+/** DataSource V2 LINE source over stream-record JSON-line directories:
+  * `spark.read.format("graft-cdc").load(dir)` (batch) and
+  * `spark.readStream.format("graft-cdc").load(dir)` (micro-batch: new files
+  * are the stream) — the engine's OP-1 source. Schema: one `line STRING`
+  * column. The source decodes nothing: the record program
+  * ([[graft.cdc.RecordProcessor.processLine]]) parses each record exactly
+  * once, downstream.
   *
-  * Pushdown contract — designed so correctness NEVER rests on the source:
-  * `pushFilters` returns every filter as residual, so Spark re-applies the
-  * exact predicate above the scan regardless of what the source skipped
-  * (filters a source accepts outright are trusted and never re-checked —
-  * too sharp a knife for a line-skipping optimization). Inside the scan, pk
-  * equality/prefix predicates drive two SAFE reductions: a pre-parse
-  * substring skip, applied only when the needle contains no
-  * JSON-escapable characters (so a matching line must contain it verbatim),
-  * and an exact post-parse pk check (emitting a subset of matches is fine —
-  * the residual filter above is the authority on what stays).
+  * Read options: `path`, `splitSize` (byte-range split size, Hadoop line
+  * semantics), `maxFilesPerTrigger` (streaming admission) and `pkFilters`
+  * (a JSON array of reference-style pk patterns, OR'd — the analogue of
+  * DynamoDB's event-source-mapping filter running before the handler, the
+  * reference's `lib/constructs/dynamo.ts:157-191`).
   *
-  * Schema: the raw record envelope (parsed by the same
-  * [[RecordProcessor.parseRecord]] the pipeline uses — one decoder, not
-  * two), image subtrees as JSON strings. pk semantics match the fused
-  * pipeline: S-typed pk surfaces raw, other tags as their JSON text, and a
-  * record whose Keys fail to unmarshall drops (OP-3).
+  * `pkFilters` contract — the source only PRUNES, never decides: a line is
+  * skipped only when it contains no pattern verbatim, and that pre-parse
+  * substring skip fires only when EVERY pattern is escape-free (no quote,
+  * backslash or control character, which JSON would print differently).
+  * Every surviving line still goes through the exact pk check downstream
+  * (`processLine`, or the `streamRecords` residual).
+  *
+  * Tasks: each scan packs its byte-range splits into at most one task per
+  * slot ([[CdcScan.pack]]), so a trigger of many small files costs a couple
+  * of tasks (and bus files), not one per file.
   */
 class CdcSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-cdc"
@@ -51,36 +55,13 @@ class CdcSource extends TableProvider with DataSourceRegister {
 }
 
 object CdcSource {
-  val schema: StructType = StructType(Seq(
-    StructField("eventID", StringType),
-    StructField("eventName", StringType),
-    StructField("sizeBytes", LongType),
-    StructField("pk", StringType),
-    StructField("keysJson", StringType),
-    StructField("newImageJson", StringType),
-    StructField("oldImageJson", StringType),
-    // present-but-EMPTY `dynamodb` ({}) flattens to the same NULL columns as
-    // an absent one, but the reference treats them differently (truthy {}
-    // passes the validity guard, dynamo-stream-handler.ts:92-97) — the
-    // marker keeps the envelope lossless so consumers can reconstruct
-    StructField("hasDynamodb", BooleanType)))
-
-  /** Per-record error isolation (OP-3) at the row-parse layer: NonFatal
-    * parse failures drop the record; fatal errors (OOM, InterruptedException)
-    * MUST propagate — swallowing them would mask task kills as silently
-    * dropped rows.
-    */
-  private[sources] def droppingNonFatal[T](f: => Option[T]): Option[T] =
-    try f catch { case scala.util.control.NonFatal(_) => None }
+  val schema: StructType = StructType(Seq(StructField("line", StringType)))
 
   /** pk text exactly as the fused pipeline computes it
     * (RecordProcessor.processLine semantics); throws on malformed Keys.
     */
-  private[sources] def pkText(keysJson: String): Option[String] =
-    AttrCodec.unmarshallItem(keysJson).get("pk").map {
-      case AttrVal.SVal(s) => s
-      case other => AttrVal.printJson(other)
-    }
+  private[graft] def pkText(keysJson: String): Option[String] =
+    AttrCodec.unmarshallItem(keysJson).get("pk").map(RecordProcessor.keyText)
 }
 
 /** Hadoop Configuration is not serializable; standard write/readFields
@@ -106,98 +87,37 @@ private[sources] class CdcTable(path: String) extends Table with SupportsRead {
   override def schema(): StructType = CdcSource.schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new CdcScanBuilder(path, options.getLong("splitSize", 128L * 1024 * 1024),
-      CdcTable.optionFilters(options),
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = () =>
+    new CdcScan(path,
+      Option(options.get("pkFilters")).fold(Seq.empty[PkFilter.Rule])(PkFilter.fromOption),
+      options.getLong("splitSize", 128L * 1024 * 1024),
       options.getInt("maxFilesPerTrigger", Int.MaxValue))
 }
 
-private[sources] object CdcTable {
-  /** `pkFilters` read option — a JSON array of reference-style pk patterns
-    * (`"a"` eq, `"a*"` prefix, more stars rejected, [[graft.cdc.PkFilter]]).
-    * This is how STREAMING reads get source-level pk pruning: Catalyst's
-    * filter pushdown does not run on streaming DSv2 relations, so the
-    * predicate arrives as reader config instead — which mirrors the
-    * reference, where the event-source-mapping filter is deploy-time config
-    * (`dynamo.ts:157-191`), not a query optimization. Safe by the same
-    * argument as pushed filters: the scan only PRUNES; the pipeline keeps the
-    * exact predicate above the scan.
-    */
-  def optionFilters(options: CaseInsensitiveStringMap): Array[Filter] =
-    Option(options.get("pkFilters")).map { s =>
-      graft.attr.JsonParser.parse(s) match {
-        case graft.attr.Json.JArr(items) =>
-          items.map {
-            case graft.attr.Json.JStr(pat) =>
-              graft.cdc.PkFilter.compileOne(pat) match {
-                case graft.cdc.PkFilter.Eq(v) => EqualTo("pk", v): Filter
-                case graft.cdc.PkFilter.Prefix(p) => StringStartsWith("pk", p): Filter
-              }
-            case other =>
-              throw new IllegalArgumentException(s"pkFilters entries must be strings: $other")
-          }.toArray
-        case other => throw new IllegalArgumentException(s"pkFilters must be a JSON array: $other")
-      }
-    }.getOrElse(Array.empty)
-}
-
-/** Two filter channels with DIFFERENT combination semantics, kept separate
-  * end-to-end so the scan never over-prunes:
-  *  - `conj`: filters Catalyst pushed via `pushFilters` — conjuncts of one
-  *    predicate, a row must satisfy ALL of them;
-  *  - `disj`: reference-style patterns from the `pkFilters` option — OR'd
-  *    rules (`dynamo.ts:175-185`), a row must satisfy ANY of them.
-  */
-private[sources] class CdcScanBuilder(path: String, splitSize: Long,
-    disj: Array[Filter] = Array.empty, maxFilesPerTrigger: Int = Int.MaxValue)
-    extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
-  private var conj: Array[Filter] = Array.empty
-  private var required: StructType = CdcSource.schema
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    conj = filters.filter {
-      case EqualTo("pk", _: String) => true
-      case StringStartsWith("pk", _) => true
-      case _ => false
-    }
-    filters // ALL residual: Spark re-applies exactly; the scan only prunes
-  }
-  override def pushedFilters(): Array[Filter] = (conj ++ disj).distinct
-  // column pruning: a projection of (eventID, pk) ships 2 small strings per
-  // row instead of the whole envelope with its image JSON bodies
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-  override def build(): Scan =
-    new CdcScan(path, conj, disj, required, splitSize, maxFilesPerTrigger)
-}
-
-private[sources] class CdcScan(path: String, conj: Array[Filter], disj: Array[Filter],
-    required: StructType, splitSize: Long,
-    maxFilesPerTrigger: Int = Int.MaxValue) extends Scan with Batch {
-  override def readSchema(): StructType = required
+private[sources] class CdcScan(path: String, rules: Seq[PkFilter.Rule], splitSize: Long,
+    maxFilesPerTrigger: Int) extends Scan with Batch {
+  override def readSchema(): StructType = CdcSource.schema
   override def toBatch: Batch = this
   override def description(): String =
-    s"graft-cdc path=$path PushedFilters=[${(conj ++ disj).distinct.mkString(", ")}] " +
-      s"ReadSchema=[${required.fieldNames.mkString(", ")}]"
+    s"graft-cdc path=$path pkFilters=[${rules.mkString(", ")}]"
 
-  private val hadoopConf = new SerializableHadoopConf(
-    SparkSession.active.sessionState.newHadoopConf())
+  private val spark = SparkSession.active
+  private val hadoopConf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
+  // the slot count the packing targets, read once when the scan is planned
+  private val parallelism = spark.sparkContext.defaultParallelism
 
   override def planInputPartitions(): Array[InputPartition] =
-    CdcScan.splitFiles(CdcScan.listFiles(path, hadoopConf), splitSize)
+    CdcScan.plan(CdcScan.listFiles(path, hadoopConf), splitSize, parallelism)
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new CdcReaderFactory(conj, disj, required.fieldNames, hadoopConf)
+    new CdcReaderFactory(rules, hadoopConf)
 
   /** Streaming read over the same directory: new files are the stream (the
     * engine analogue of new stream-shard batches arriving). Same reader, same
-    * source-level pk pruning, same byte-range splits as the batch path — the
-    * point of MICRO_BATCH_READ is that the streaming pipeline loses none of
-    * the pruning the reference applies before its handler is invoked
-    * (`/root/reference/lib/constructs/dynamo.ts:157-191`).
+    * `pkFilters` pruning, same splits and packing as the batch path.
     */
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new CdcMicroBatchStream(path, conj, disj, required, splitSize, hadoopConf,
-      maxFilesPerTrigger)
+    new CdcMicroBatchStream(path, rules, splitSize, parallelism, hadoopConf, maxFilesPerTrigger)
 }
 
 private[sources] object CdcScan {
@@ -215,58 +135,54 @@ private[sources] object CdcScan {
     files.map(f => (f.getPath.toString, f.getLen))
   }
 
-  /** BYTE-RANGE SPLIT at `splitSize` (Hadoop line-reader boundary semantics:
-    * a split owns the lines that start inside (start, end]) — one 100 GB
-    * archive file must not become one task.
+  /** BYTE-RANGE SPLITS at `splitSize` (Hadoop line-reader boundary semantics:
+    * a split owns the lines that start inside [start, start + length]) — one
+    * 100 GB archive file is 800 splits, which [[pack]] never merges below
+    * its byte count. A zero-length file is one empty split.
     */
-  def splitFiles(files: Seq[(String, Long)], splitSize: Long): Array[InputPartition] =
+  def splitFiles(files: Seq[(String, Long)], splitSize: Long): Seq[CdcSplit] =
     files.flatMap { case (f, len) =>
-      if (len == 0) Seq(CdcFilePartition(f, 0L, 0L))
+      if (len == 0) Seq(CdcSplit(f, 0L, 0L))
       else (0L until len by splitSize).map { start =>
-        CdcFilePartition(f, start, math.min(splitSize, len - start))
+        CdcSplit(f, start, math.min(splitSize, len - start))
       }
-    }.map(identity[InputPartition]).toArray
-}
-
-/** Streaming offset = the set of files fully processed, as a single-line
-  * JSON object `{path: length, ...}` sorted by path. Single-line is a HARD
-  * requirement: Spark's OffsetSeqLog is line-oriented — one line per source —
-  * so a newline inside an offset splits it into phantom sources on restart.
-  * Files are immutable once written (the append pattern of stream archives;
-  * in-place growth is not tracked).
-  */
-private[sources] case class CdcOffset(files: Map[String, Long]) extends StreamingOffset {
-  override def json(): String =
-    graft.attr.Json.JObj(
-      files.toVector.sortBy(_._1).map { case (p, l) =>
-        (p, graft.attr.Json.JNum(BigDecimal(l)))
-      }).print
-}
-
-private[sources] object CdcOffset {
-  def fromJson(s: String): CdcOffset =
-    if (s.isEmpty) CdcOffset(Map.empty)
-    else graft.attr.JsonParser.parse(s) match {
-      case o: graft.attr.Json.JObj =>
-        CdcOffset(o.fields.map {
-          case (p, graft.attr.Json.JNum(n)) => (p, n.toLong)
-          case (p, other) => throw new IllegalArgumentException(
-            s"malformed CdcOffset entry $p -> $other")
-        }.toMap)
-      case other => throw new IllegalArgumentException(s"malformed CdcOffset: $other")
     }
+
+  /** Packs splits into `n = min(#splits, max(parallelism, ceil(bytes /
+    * splitSize)))` tasks: one task per slot for a trigger of small files, at
+    * least one task per `splitSize` bytes for large inputs. Largest split
+    * first onto the least-loaded task (bytes, then split count, then index —
+    * so every task gets a split and the grouping depends only on the
+    * splits); each task reads its splits in (path, start) order.
+    */
+  def pack(splits: Seq[CdcSplit], splitSize: Long, parallelism: Int): Array[InputPartition] = {
+    val total = splits.map(_.length).sum
+    val n = math.min(splits.size.toLong,
+      math.max(parallelism.toLong, (total + splitSize - 1) / splitSize)).toInt
+    val groups = Array.fill(n)(Vector.newBuilder[CdcSplit])
+    val least = mutable.PriorityQueue.empty[(Long, Int, Int)](Ordering[(Long, Int, Int)].reverse)
+    (0 until n).foreach(i => least.enqueue((0L, 0, i)))
+    splits.sortBy(s => (-s.length, s.file, s.start)).foreach { s =>
+      val (bytes, count, i) = least.dequeue()
+      groups(i) += s
+      least.enqueue((bytes + s.length, count + 1, i))
+    }
+    groups.map(g => CdcTaskPartition(g.result().sortBy(s => (s.file, s.start))): InputPartition)
+  }
+
+  def plan(files: Seq[(String, Long)], splitSize: Long, parallelism: Int): Array[InputPartition] =
+    pack(splitFiles(files, splitSize), splitSize, parallelism)
 }
 
 /** Micro-batch planning: each trigger processes the files that appeared since
-  * the last committed offset, split by byte range exactly like the batch
-  * scan. Implements [[SupportsTriggerAvailableNow]] so `Trigger.AvailableNow`
-  * pins the end offset once at query start (drain-and-stop semantics without
-  * the wrapper's extra listing per batch).
+  * the last committed offset, split and packed exactly like the batch scan.
+  * Implements [[SupportsTriggerAvailableNow]] so `Trigger.AvailableNow` pins
+  * the end offset once at query start (drain-and-stop semantics without the
+  * wrapper's extra listing per batch).
   */
-private[sources] class CdcMicroBatchStream(path: String, conj: Array[Filter],
-    disj: Array[Filter], required: StructType, splitSize: Long,
-    hadoopConf: SerializableHadoopConf, maxFilesPerTrigger: Int = Int.MaxValue)
-    extends MicroBatchStream with SupportsTriggerAvailableNow {
+private[sources] class CdcMicroBatchStream(path: String, rules: Seq[PkFilter.Rule],
+    splitSize: Long, parallelism: Int, hadoopConf: SerializableHadoopConf,
+    maxFilesPerTrigger: Int) extends MicroBatchStream with SupportsTriggerAvailableNow {
 
   private var fixedEnd: Option[CdcOffset] = None
 
@@ -306,128 +222,102 @@ private[sources] class CdcMicroBatchStream(path: String, conj: Array[Filter],
     val done = start.asInstanceOf[CdcOffset].files
     val now = end.asInstanceOf[CdcOffset].files
     val fresh = now.toSeq.filter { case (p, _) => !done.contains(p) }.sortBy(_._1)
-    CdcScan.splitFiles(fresh, splitSize)
+    CdcScan.plan(fresh, splitSize, parallelism)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new CdcReaderFactory(conj, disj, required.fieldNames, hadoopConf)
+    new CdcReaderFactory(rules, hadoopConf)
 
   override def commit(end: StreamingOffset): Unit = ()
   override def stop(): Unit = ()
 }
 
-private[sources] case class CdcFilePartition(file: String, start: Long, length: Long)
-    extends InputPartition
+/** One byte range of one file: the lines that start inside it. */
+private[sources] case class CdcSplit(file: String, start: Long, length: Long)
 
-private[sources] class CdcReaderFactory(
-    conj: Array[Filter], disj: Array[Filter], requiredCols: Array[String],
-    hadoopConf: SerializableHadoopConf)
-    extends PartitionReaderFactory {
+/** One task's splits, read one after another in (path, start) order. */
+private[sources] case class CdcTaskPartition(splits: Seq[CdcSplit]) extends InputPartition
+
+private[sources] class CdcReaderFactory(rules: Seq[PkFilter.Rule],
+    hadoopConf: SerializableHadoopConf) extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val part = partition.asInstanceOf[CdcFilePartition]
-    val file = part.file
+    val splits = partition.asInstanceOf[CdcTaskPartition].splits.iterator
     // Pre-parse needles, ONLY for values JSON never escapes in our format
     // (quote/backslash/control chars would differ between the pk text and
     // its in-line representation, and any char may legally be \u-escaped by
-    // exotic writers — such needles disable the shortcut, never correctness)
-    def needleOf(f: Filter): Option[String] = f match {
-      case EqualTo("pk", v: String) if escapeFree(v) => Some(v)
-      case StringStartsWith("pk", p) if escapeFree(p) => Some(p)
-      case _ => None
+    // exotic writers — such needles disable the shortcut, never correctness).
+    // A matching line contains AT LEAST ONE pattern needle.
+    val needles = rules.map {
+      case PkFilter.Eq(v) => v
+      case PkFilter.Prefix(p) => p
     }
-    val conjNeedles = conj.flatMap(needleOf(_))
-    val disjNeedles = disj.flatMap(needleOf(_))
-    // the substring shortcut may only fire when EVERY filter yielded a needle
-    val skipSafe = conjNeedles.length == conj.length &&
-      disjNeedles.length == disj.length && (conj.nonEmpty || disj.nonEmpty)
-    // a matching line must contain ALL conjunct needles and (when patterns
-    // are configured) AT LEAST ONE pattern needle
-    def lineMayMatch(line: String): Boolean =
-      conjNeedles.forall(line.contains) &&
-        (disjNeedles.isEmpty || disjNeedles.exists(line.contains))
-    def matchOne(pk: String, f: Filter): Boolean = f match {
-      case EqualTo("pk", v: String) => pk == v
-      case StringStartsWith("pk", p) => pk.startsWith(p)
-      case _ => true
-    }
-    val filtering = conj.nonEmpty || disj.nonEmpty
-    def pkMatches(pk: String): Boolean =
-      conj.forall(matchOne(pk, _)) && (disj.isEmpty || disj.exists(matchOne(pk, _)))
+    val skipSafe = needles.nonEmpty && needles.forall(escapeFree)
 
     new PartitionReader[InternalRow] {
-      private val hPath = new org.apache.hadoop.fs.Path(file)
-      private val in = hPath.getFileSystem(hadoopConf.value).open(hPath)
-      // Hadoop LineReader: exact BYTE accounting for split boundaries
-      // (char-based readers can't track file offsets through buffering).
-      // Split contract (same as Hadoop's LineRecordReader): a split owns
-      // every line that STARTS inside [start, start+length); a reader with
-      // start > 0 discards the first (partial) line, and the last owned
-      // line is read to completion past the boundary.
-      private val lr = {
-        if (part.start > 0) in.seek(part.start)
-        new org.apache.hadoop.util.LineReader(in)
-      }
-      private val end = part.start + part.length
-      private var pos = part.start
-      private val text = new org.apache.hadoop.io.Text()
-      if (part.start > 0) pos += lr.readLine(text) // skip the partial line
-      private var row: InternalRow = _
+      private var lines: SplitLines = _
+      private val row = new GenericInternalRow(1)
 
       override def next(): Boolean = {
-        // `pos <= end`, not `<`: a line starting EXACTLY at `end` belongs to
-        // this split (Hadoop LineRecordReader reads while position <= end);
-        // the next split's unconditional first-line skip discards it. With
-        // strict `<` neither split would read it — silent data loss on any
-        // file where a line start aligns with a splitSize multiple.
-        while (pos <= end) {
-          val n = lr.readLine(text)
-          if (n == 0) return false // EOF
-          pos += n
-          // new String(bytes, UTF_8) REPLACEs malformed bytes — a poison
-          // byte must not throw from the line iterator (OP-3 at the source)
-          val line = new String(text.getBytes, 0, text.getLength,
-            java.nio.charset.StandardCharsets.UTF_8)
-          if (!skipSafe || lineMayMatch(line)) {
-            parse(line) match {
-              case Some(r) => row = r; return true
-              case None => () // malformed or pk-pruned — residual is authority
-            }
+        while (lines != null || splits.hasNext) {
+          if (lines == null) lines = new SplitLines(splits.next(), hadoopConf)
+          val line = lines.next()
+          if (line == null) { lines.close(); lines = null }
+          else if (!skipSafe || needles.exists(line.contains)) {
+            row.update(0, UTF8String.fromString(line))
+            return true
           }
         }
         false
       }
       override def get(): InternalRow = row
-      override def close(): Unit = lr.close()
-
-      private def parse(l: String): Option[InternalRow] =
-        CdcSource.droppingNonFatal {
-          RecordProcessor.parseRecord(l).flatMap { rec =>
-            val ddb = rec.dynamodb
-            val keysJson = ddb.flatMap(_.Keys)
-            // throws on malformed Keys → record drops, like processLine
-            val pk = keysJson.flatMap(CdcSource.pkText)
-            if (filtering && !pk.exists(pkMatches)) None
-            else {
-              def s(v: Option[String]): UTF8String =
-                v.map(UTF8String.fromString).orNull
-              // emit only the pruned columns, in Spark's requested order
-              Some(new GenericInternalRow(requiredCols.map[Any] {
-                case "eventID" => s(rec.eventID)
-                case "eventName" => s(rec.eventName)
-                case "sizeBytes" => ddb.flatMap(_.SizeBytes).map(java.lang.Long.valueOf).orNull
-                case "pk" => s(pk)
-                case "keysJson" => s(keysJson)
-                case "newImageJson" => s(ddb.flatMap(_.NewImage))
-                case "oldImageJson" => s(ddb.flatMap(_.OldImage))
-                case "hasDynamodb" => java.lang.Boolean.valueOf(ddb.isDefined)
-              }))
-            }
-          }
-        }
+      override def close(): Unit = if (lines != null) lines.close()
     }
   }
 
   private def escapeFree(v: String): Boolean =
     v.forall(c => c >= 0x20 && c < 0x7f && c != '"' && c != '\\')
+}
+
+/** The lines of one split, opened on construction. Hadoop LineReader: exact
+  * BYTE accounting for split boundaries (char-based readers can't track file
+  * offsets through buffering). Split contract (same as Hadoop's
+  * LineRecordReader): a split owns every line that STARTS inside
+  * [start, start + length]; a reader with start > 0 discards the first
+  * (partial) line, and the last owned line is read to completion past the
+  * boundary.
+  */
+private[sources] final class SplitLines(split: CdcSplit, hadoopConf: SerializableHadoopConf) {
+  private val lr = {
+    val p = new org.apache.hadoop.fs.Path(split.file)
+    val in = p.getFileSystem(hadoopConf.value).open(p)
+    if (split.start > 0) in.seek(split.start)
+    new org.apache.hadoop.util.LineReader(in)
+  }
+  private val end = split.start + split.length
+  private var pos = split.start
+  private val text = new org.apache.hadoop.io.Text()
+  if (split.start > 0) pos += lr.readLine(text) // skip the partial line
+
+  /** The next owned line, or null past the split. `pos <= end`, not `<`: a
+    * line starting EXACTLY at `end` belongs to this split (Hadoop
+    * LineRecordReader reads while position <= end); the next split's
+    * unconditional first-line skip discards it. With strict `<` neither
+    * split would read it — silent data loss on any file where a line start
+    * aligns with a splitSize multiple.
+    */
+  def next(): String =
+    if (pos > end) null
+    else {
+      val n = lr.readLine(text)
+      if (n == 0) null // EOF
+      else {
+        pos += n
+        // new String(bytes, UTF_8) REPLACEs malformed bytes — a poison byte
+        // must not throw from the line iterator (OP-3 at the source)
+        new String(text.getBytes, 0, text.getLength, java.nio.charset.StandardCharsets.UTF_8)
+      }
+    }
+
+  def close(): Unit = lr.close()
 }

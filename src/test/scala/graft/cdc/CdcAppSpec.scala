@@ -32,18 +32,27 @@ class CdcAppSpec extends SparkSuite {
 
   test("custom transform replaces the stock handler (functionPath analogue)") {
     import spark.implicits._
-    val paths = setup(Seq(write))
+    def rec(id: String, keys: String) =
+      s"""{"eventID":"$id","eventName":"INSERT","dynamodb":{"SizeBytes":50,"Keys":$keys,"NewImage":{"v":{"N":"1"}}}}"""
+    // every extra line carries a filter needle, so only the exact pk-text
+    // residual can drop it: an S pk outside the rules, an N pk that only
+    // contains one, and malformed (untagged) Keys
+    val paths = setup(Seq(write,
+      rec("a-n7", """{"pk":{"N":"7"}}"""),
+      rec("a-n70", """{"pk":{"N":"70"}}"""),
+      rec("a-s3", """{"pk":{"S":"U#3"},"sk":{"S":"U#1"}}"""),
+      rec("a-bad", """{"pk":"U#1"}""")))
     val custom: Dataset[CdcRecord] => Dataset[RecordProcessor.Processed] = recs =>
       recs.map(r => RecordProcessor.Processed(ItemChanged(
         operation = "CUSTOM", pk = None, sk = None, attributesChanged = Nil,
         before = "{}", after = "{}", newImage = None, oldImage = None,
         imagesUrl = None, eventID = r.eventID.getOrElse("?")), None))
-    val app = new CdcApp(spark,
-      CdcSpec(eventSource = "app-spec", transform = Some(custom)), paths)
+    val app = new CdcApp(spark, CdcSpec(eventSource = "app-spec", pkFilters = Seq("U#1", "7"),
+      transform = Some(custom)), paths)
     app.start().foreach(_.awaitTermination())
     val bus = spark.read.parquet(paths.busDir)
-    assert(bus.count() == 1)
-    assert(bus.select("detail").head().getString(0).contains(""""operation":"CUSTOM""""))
+    assert(bus.select("eventID").as[String].collect().sorted.toSeq == Seq("a-1", "a-n7"))
+    assert(bus.select("detail").as[String].collect().forall(_.contains(""""operation":"CUSTOM"""")))
   }
 
   test("invalid pkFilter fails at assembly, like synth-time filter compile") {

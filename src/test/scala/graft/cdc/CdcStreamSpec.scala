@@ -66,8 +66,7 @@ class CdcStreamSpec extends SparkSuite {
     val batchIds = CdcPipeline.batch(spark, writeLines(Seq(emptyDdb, noDdb)), cfg)
       .collect().map(_.eventID).sorted
     assert(batchIds.toSeq == Seq("s-e"))
-    // streaming over the DSv2 source: the hasDynamodb marker preserves the
-    // distinction through the flattened envelope
+    // streaming over the line source: processLine sees the same distinction
     val (bus, _, _) = run(Seq(emptyDdb, noDdb))
     assert(bus.map(_.eventID) == Seq("s-e"), bus.map(_.eventID).mkString(","))
     // and the emitted event is the claim-check shape (SizeBytes absent = Q5
@@ -78,6 +77,72 @@ class CdcStreamSpec extends SparkSuite {
   test("stream: pk filter applies before the per-record program") {
     val (bus, _, _) = run(Seq(small, bigRemove), c => c.copy(pkFilters = Seq("U#1")))
     assert(bus.map(_.eventID) == Seq("s-1"))
+  }
+
+  /** Every GoldenSpec record, garbage, a poison byte, `dynamodb: {}`,
+    * missing/untagged/escaped/N-typed pks. */
+  private val parityLines: Seq[Array[Byte]] = {
+    val img = """{"pk":{"S":"P"},"m":{"M":{"t":{"L":[{"S":"a"}]}}}}"""
+    val body = """"Keys":{"pk":{"S":"P"}},"NewImage":{"pk":{"S":"P"}}"""
+    def modify(id: String, oldImg: String, newImg: String) =
+      s"""{"eventID":"$id","eventName":"MODIFY","dynamodb":{"SizeBytes":60,"Keys":{"pk":{"S":"P"}},"OldImage":{"pk":{"S":"P"},$oldImg},"NewImage":{"pk":{"S":"P"},$newImg}}}"""
+    Seq(
+      """{"eventID":"g1","eventName":"INSERT","dynamodb":{"SizeBytes":60,"Keys":{"pk":{"S":"P"},"sk":{"S":"S"}},"NewImage":{"pk":{"S":"P"},"sk":{"S":"S"},"a":{"N":"1"}}}}""",
+      """{"eventID":"g2","eventName":"REMOVE","dynamodb":{"SizeBytes":60,"Keys":{"pk":{"S":"P"}},"OldImage":{"pk":{"S":"P"},"a":{"N":"1"}}}}""",
+      s"""{"eventID":"g3","eventName":"MODIFY","dynamodb":{"SizeBytes":60,"Keys":{"pk":{"S":"P"}},"OldImage":$img,"NewImage":$img}}""",
+      modify("g4", """"meta":{"M":{"visits":{"N":"3"}}}""", """"meta":{"M":{"visits":{"N":"4"}}}"""),
+      modify("g5", """"l":{"L":[{"N":"1"},{"N":"2"}]}""", """"l":{"L":[{"N":"2"},{"N":"1"}]}"""),
+      modify("g6", """"x":{"NULL":true}""", """"x":{"M":{}}"""),
+      modify("g7", """"roles":{"SS":["admin","user"]}""", """"roles":{"SS":["admin"]}"""),
+      modify("g8", """"b":{"B":"AQID"}""", """"b":{"B":"AQX/"}"""),
+      s"""{"eventID":"g9","eventName":"INSERT","dynamodb":{"SizeBytes":65536,$body}}""",
+      s"""{"eventID":"g10","eventName":"INSERT","dynamodb":{$body}}""",
+      s"""{"eventID":"g11","eventName":"INSERT","dynamodb":{"SizeBytes":65535,$body}}""",
+      """{"eventID":"g12","dynamodb":{"SizeBytes":1}}""",
+      """{"eventName":"INSERT","dynamodb":{"SizeBytes":1}}""",
+      """{"eventID":"g13","eventName":"INSERT"}""",
+      "not json", "{", """{"eventName":"INSERT"}""",
+      """{"eventID":"s-e","eventName":"INSERT","dynamodb":{}}""",
+      """{"eventID":"n-1","eventName":"INSERT","dynamodb":{"SizeBytes":10,"Keys":{"sk":{"S":"USER#2"}},"NewImage":{"x":{"N":"1"}}}}""",
+      """{"eventID":"n-2","eventName":"INSERT","dynamodb":{"SizeBytes":10,"Keys":{"pk":"USER#2"},"NewImage":{"x":{"N":"1"}}}}""",
+      """{"eventID":"e-1","eventName":"INSERT","dynamodb":{"SizeBytes":10,"Keys":{"pk":{"S":"A\"B"}},"NewImage":{"pk":{"S":"A\"B"}}}}""",
+      """{"eventID":"u-1","eventName":"INSERT","dynamodb":{"SizeBytes":10,"Keys":{"pk":{"S":"USER#1"}},"NewImage":{"pk":{"S":"USER#1"}}}}""",
+      """{"eventID":"o-9","eventName":"REMOVE","dynamodb":{"SizeBytes":10,"Keys":{"pk":{"S":"ORG#9"}},"OldImage":{"pk":{"S":"ORG#9"}}}}""",
+      """{"eventID":"k-7","eventName":"INSERT","dynamodb":{"SizeBytes":10,"Keys":{"pk":{"N":"7"}},"NewImage":{"pk":{"N":"7"}}}}""",
+      """{"eventID":"k-70","eventName":"INSERT","dynamodb":{"SizeBytes":10,"Keys":{"pk":{"N":"70"}},"NewImage":{"pk":{"N":"70"}}}}"""
+    ).map(_.getBytes("UTF-8")) ++ Seq(
+      ("""{"eventID":"x-1","eventName":"INSERT","dynamodb":{"SizeBytes":10,"Keys":{"pk":{"S":"USER#9"}},"NewImage":{"s":{"S":"a""".getBytes("UTF-8") :+ 0xFF.toByte) ++
+        """b"}}}}""".getBytes("UTF-8"),
+      "garbageÿ".getBytes("ISO-8859-1"))
+  }
+
+  test("stream and batch publish the same bus rows and blobs") {
+    import spark.implicits._
+    val configs = Seq(
+      CdcConfig(),
+      CdcConfig(strictCompat = true),
+      // OR'd escape-free patterns: the source's substring skip is on
+      CdcConfig(pkFilters = Seq("P", "USER#*", "7")),
+      // a pattern JSON escapes: the skip is off, the exact check decides
+      CdcConfig(pkFilters = Seq("A\"B", "ORG#*")))
+    configs.zipWithIndex.foreach { case (c0, i) =>
+      val base = Files.createTempDirectory("graft-parity").toString
+      val in = s"$base/in"
+      Files.createDirectories(Paths.get(in))
+      Files.write(Paths.get(s"$in/a.json"), parityLines.reduce(_ ++ "\n".getBytes ++ _))
+      val c = c0.copy(eventSource = "parity", blobDir = s"$base/blobs")
+      CdcPipeline.stream(spark, in, s"$base/bus", s"$base/ckpt", c).start().awaitTermination()
+      val streamed = spark.read.parquet(s"$base/bus").as[BusEvent].collect().toSeq.sortBy(_.eventID)
+      val batched = CdcPipeline.busRows(CdcPipeline.batch(spark, in, c), c)
+        .collect().toSeq.sortBy(_.eventID)
+      assert(streamed.nonEmpty && streamed == batched, s"config $i")
+      val blobDir = new java.io.File(c.blobDir)
+      val streamBlobs = Option(blobDir.listFiles()).toSeq.flatten
+        .map(f => f.getName -> new String(Files.readAllBytes(f.toPath), "UTF-8")).sortBy(_._1)
+      val batchBlobs = CdcPipeline.processedLines(spark.read.textFile(in), c)
+        .collect().toSeq.flatMap(_.blob).map(b => b.key -> b.body).sortBy(_._1)
+      assert(streamBlobs == batchBlobs, s"config $i")
+    }
   }
 
   test("backfill: replay appends only unseen eventIDs, rewrites blobs") {

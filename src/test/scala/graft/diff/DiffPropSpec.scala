@@ -31,7 +31,7 @@ object DiffPropSpec extends Properties("Diff") {
       vals <- Gen.sequence[Vector[AttrVal], AttrVal](keys.map(_ => genVal(depth)).toVector)
     } yield keys.toVector.zip(vals)
 
-  private val genItem: Gen[MVal] = genFields(3).map(MVal(_))
+  private[graft] val genItem: Gen[MVal] = genFields(3).map(MVal(_))
   implicit private val arbItem: Arbitrary[MVal] = Arbitrary(genItem)
 
   property("diff(x, x) is empty") = forAll { (x: MVal) =>

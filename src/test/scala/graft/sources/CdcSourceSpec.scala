@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.SparkSuite
+import graft.cdc.{CdcConfig, PkFilter, RecordProcessor}
 
 class CdcSourceSpec extends SparkSuite {
 
@@ -23,36 +24,24 @@ class CdcSourceSpec extends SparkSuite {
     dir
   }
 
-  private def read(dir: String) =
-    spark.read.format(classOf[CdcSource].getName).load(dir)
+  private def read(dir: String, opts: (String, String)*): Seq[String] =
+    spark.read.format(classOf[CdcSource].getName).options(opts.toMap).load(dir)
+      .collect().map(_.getString(0)).toSeq
+
+  private val EventId = """"eventID":"([^"]*)"""".r
+  private def eventId(line: String): String =
+    EventId.findFirstMatchIn(line).map(_.group(1)).getOrElse(line)
+
+  /** The byte-range splits of every file under `dir`. */
+  private def splitsOf(dir: String, splitSize: Long): Seq[CdcSplit] =
+    CdcScan.splitFiles(CdcScan.listFiles(dir,
+      new SerializableHadoopConf(spark.sessionState.newHadoopConf())), splitSize)
 
   test("short name 'graft-cdc' resolves via DataSourceRegister") {
     val df = spark.read.format("graft-cdc").load(writeDir())
-    assert(df.count() == 4)
-  }
-
-  test("DSv2 source reads the record envelope; garbage drops (OP-3)") {
-    val df = read(writeDir())
-    val rows = df.orderBy("eventID").collect()
-    assert(rows.map(_.getAs[String]("eventID")).toSeq == Seq("d-1", "d-2", "d-3", "d-5"))
-    val r1 = rows.head
-    assert(r1.getAs[String]("pk") == "USER#1" && r1.getAs[Long]("sizeBytes") == 50L)
-    assert(r1.getAs[String]("newImageJson").contains(""""v":{"N":"1"}"""))
-    // number-typed pk surfaces as its raw JSON text
-    assert(rows.last.getAs[String]("pk") == "7")
-  }
-
-  test("pk equality and prefix filters push into the source scan") {
-    val dir = writeDir()
-    val eq = read(dir).filter(col("pk") === "USER#2")
-    assert(eq.collect().map(_.getAs[String]("eventID")).toSeq == Seq("d-2"))
-    val eqScan = eq.queryExecution.executedPlan.collectLeaves().map(_.toString).mkString
-    assert(eqScan.contains("PushedFilters=[EqualTo(pk,USER#2)]"), eqScan.take(400))
-
-    val pre = read(dir).filter(col("pk").startsWith("USER#"))
-    assert(pre.collect().map(_.getAs[String]("eventID")).sorted.toSeq == Seq("d-1", "d-2"))
-    val preScan = pre.queryExecution.executedPlan.collectLeaves().map(_.toString).mkString
-    assert(preScan.contains("PushedFilters=[StringStartsWith(pk,USER#)]"), preScan.take(400))
+    assert(df.schema == CdcSource.schema && df.schema.fieldNames.toSeq == Seq("line"))
+    // a line source: the garbage line is a line too; the record program drops it
+    assert(df.count() == 5)
   }
 
   test("byte-range splits: tiny splitSize reads every line exactly once") {
@@ -63,13 +52,12 @@ class CdcSourceSpec extends SparkSuite {
     Files.write(Paths.get(s"$dir/big.json"), many.mkString("\n").getBytes)
     // ~150-byte lines with a 256-byte splitSize → dozens of splits, every
     // boundary landing mid-line
-    val df = spark.read.format(classOf[CdcSource].getName)
-      .option("splitSize", "256").load(dir)
-    assert(df.rdd.getNumPartitions > 10, s"expected many splits, got ${df.rdd.getNumPartitions}")
-    val ids = df.select("eventID").collect().map(_.getString(0))
+    val splits = splitsOf(dir, 256).length
+    assert(splits > 10, s"expected many splits, got $splits")
+    val ids = read(dir, "splitSize" -> "256").map(eventId)
     assert(ids.length == 200 && ids.distinct.length == 200)
-    // filters still exact across split boundaries
-    assert(df.filter(col("pk") === "U#3").count() ==
+    // pk pruning still exact across split boundaries
+    assert(read(dir, "splitSize" -> "256", "pkFilters" -> """["U#3"]""").length ==
       (0 until 200).count(_ % 7 == 3))
   }
 
@@ -89,29 +77,51 @@ class CdcSourceSpec extends SparkSuite {
     val many = (0 until 64).map(line)
     assert(many.forall(_.length == 127))
     Files.write(Paths.get(s"$dir/aligned.json"), many.mkString("\n").getBytes)
-    val df = spark.read.format(classOf[CdcSource].getName)
-      .option("splitSize", "128").load(dir)
-    assert(df.rdd.getNumPartitions >= 63, s"got ${df.rdd.getNumPartitions} splits")
-    val ids = df.select("eventID").collect().map(_.getString(0))
+    val splits = splitsOf(dir, 128).length
+    assert(splits >= 63, s"got $splits splits")
+    val ids = read(dir, "splitSize" -> "128").map(eventId)
     assert(ids.length == 64, s"lost lines at split boundaries: ${ids.length}/64")
     assert(ids.distinct.length == 64, "duplicated lines across splits")
   }
 
-  test("fatal errors propagate through the row parser; NonFatal drops the record") {
-    assert(CdcSource.droppingNonFatal[Int] { throw new RuntimeException("bad row") }.isEmpty)
-    intercept[OutOfMemoryError] {
-      CdcSource.droppingNonFatal[Int] { throw new OutOfMemoryError("simulated fatal") }
-    }
-  }
+  test("packing: at most one task per slot, every split in exactly one task") {
+    def packed(files: Seq[(String, Long)], splitSize: Long, slots: Int): Seq[Seq[CdcSplit]] =
+      CdcScan.plan(files, splitSize, slots).toSeq.map(_.asInstanceOf[CdcTaskPartition].splits)
+    def covers(tasks: Seq[Seq[CdcSplit]], splits: Seq[CdcSplit]): Boolean =
+      tasks.flatten.sortBy(s => (s.file, s.start)) == splits.sortBy(s => (s.file, s.start))
 
-  test("column pruning reaches the scan: projection reads only what it needs") {
-    val dir = writeDir()
-    val df = read(dir).select("eventID", "pk")
-    val rows = df.orderBy("eventID").collect()
-    assert(rows.length == 4 && rows.head.length == 2)
-    val scan = df.queryExecution.executedPlan.collectLeaves().map(_.toString).mkString
-    assert(scan.contains("ReadSchema=[eventID, pk]") ||
-      scan.contains("ReadSchema=[pk, eventID]"), scan.take(400))
+    // small input: one task per slot, never more tasks than splits
+    val small = (0 until 10).map(i => (f"/in/f$i%02d.json", 500L + i))
+    val smallTasks = packed(small, 128L << 20, 4)
+    assert(smallTasks.length == 4 && covers(smallTasks, CdcScan.splitFiles(small, 128L << 20)))
+    assert(packed(small.take(3), 128L << 20, 4).length == 3)
+    // large input: at least one task per splitSize bytes, whatever the slots
+    val large = Seq(("/in/a", 2500L), ("/in/b", 10000L), ("/in/c", 0L), ("/in/d", 700L), ("/in/e", 3333L))
+    val largeSplits = CdcScan.splitFiles(large, 1000)
+    val largeTasks = packed(large, 1000, 4)
+    assert(largeTasks.length == 17 && largeTasks.length >= (16533 + 999) / 1000)
+    assert(covers(largeTasks, largeSplits) && largeTasks.forall(_.nonEmpty))
+    // each task reads its splits in (path, start) order
+    assert(largeTasks.forall(t => t == t.sortBy(s => (s.file, s.start))))
+    // the grouping depends only on the offset range, not on listing order
+    assert(packed(large.reverse, 1000, 4) == largeTasks && packed(large, 1000, 4) == largeTasks)
+    assert(CdcScan.pack(scala.util.Random.shuffle(largeSplits), 1000, 4).toSeq ==
+      CdcScan.pack(largeSplits, 1000, 4).toSeq)
+    // a 100 GB file is still 800 tasks
+    assert(CdcScan.plan(Seq(("/in/huge", 100L << 30)), 128L << 20, 4).length == 800)
+
+    // end to end on local[4]: ten small files and an empty one read as four
+    // tasks, every line exactly once
+    val dir = Files.createTempDirectory("graft-dsv2-pack").toString
+    (0 until 10).foreach { i =>
+      Files.write(Paths.get(f"$dir/f$i%02d.json"), lines.take(3).map(_.replace("d-", s"f$i-")).mkString("\n").getBytes)
+    }
+    Files.write(Paths.get(s"$dir/empty.json"), Array.emptyByteArray)
+    val df = spark.read.format(classOf[CdcSource].getName).load(dir)
+    assert(df.rdd.getNumPartitions == 4, df.rdd.getNumPartitions.toString)
+    val ids = df.collect().map(r => eventId(r.getString(0))).toSeq
+    assert(ids.length == 30 && ids.distinct.length == 30)
+    assert(read(s"$dir/empty.json").isEmpty)
   }
 
   test("escaped pk value: pushed equality still finds the row (residual authority)") {
@@ -121,8 +131,12 @@ class CdcSourceSpec extends SparkSuite {
     Files.write(Paths.get(s"$dir/a.json"), esc.getBytes)
     // the needle A"B is not escape-free, so the substring shortcut is
     // disabled and the row must still be found via parse + exact filter
-    val rows = read(dir).filter(col("pk") === "A\"B").collect()
-    assert(rows.length == 1 && rows.head.getAs[String]("eventID") == "e-1")
+    val pattern = Seq("A\"B")
+    val read1 = read(dir, "pkFilters" -> PkFilter.toOption(pattern))
+    assert(read1 == Seq(esc))
+    val cfg = CdcConfig(eventSource = "dsv2", blobDir = "/tmp/unused", pkFilters = pattern)
+    val kept = read1.flatMap(RecordProcessor.processLine(_, cfg, PkFilter.compile(pattern)))
+    assert(kept.map(_.event.eventID) == Seq("e-1"))
   }
 
   test("missing pk under a pk filter drops; untagged pk drops like processLine") {
@@ -132,14 +146,17 @@ class CdcSourceSpec extends SparkSuite {
     val untagged =
       """{"eventID":"n-2","eventName":"INSERT","dynamodb":{"SizeBytes":10,"Keys":{"pk":"USER#2"},"NewImage":{"x":{"N":"1"}}}}"""
     Files.write(Paths.get(s"$dir/a.json"), Seq(noPk, untagged).mkString("\n").getBytes)
-    // n-1's NewImage does not contain the needle, n-2's Keys are malformed
-    // (untagged value) — neither may satisfy pk = 'USER#2'
-    assert(read(dir).filter(col("pk") === "USER#2").collect().isEmpty)
-    // unfiltered: the missing-pk record surfaces with pk NULL, the
-    // malformed-Keys record drops entirely (processLine parity)
-    val all = read(dir).collect()
-    assert(all.map(_.getAs[String]("eventID")).toSeq == Seq("n-1"))
-    assert(all.head.getAs[String]("pk") == null)
+    val cfg = CdcConfig(eventSource = "dsv2", blobDir = "/tmp/unused")
+    def kept(ls: Seq[String], pattern: Seq[String]): Seq[String] =
+      ls.flatMap(RecordProcessor.processLine(_, cfg, PkFilter.compile(pattern))).map(_.event.eventID)
+    // both lines contain the needle, so the source keeps both; neither may
+    // satisfy pk = 'USER#2' (n-1 has no pk, n-2's Keys are malformed)
+    val pruned = read(dir, "pkFilters" -> """["USER#2"]""")
+    assert(pruned.map(eventId) == Seq("n-1", "n-2"))
+    assert(kept(pruned, Seq("USER#2")).isEmpty)
+    // unfiltered: the missing-pk record surfaces, the malformed-Keys record
+    // drops entirely
+    assert(kept(read(dir), Nil) == Seq("n-1"))
   }
 
   test("a poison byte in one file does not kill the scan (OP-3 at the source)") {
@@ -149,8 +166,10 @@ class CdcSourceSpec extends SparkSuite {
     val bytes = ("garbageÿ".getBytes("ISO-8859-1") :+ 0xFF.toByte) ++
       ("\n" + good).getBytes("UTF-8")
     Files.write(Paths.get(s"$dir/a.json"), bytes)
-    val rows = read(dir).collect()
-    assert(rows.map(_.getAs[String]("eventID")).toSeq == Seq("p-1"))
+    val got = read(dir)
+    // the poison bytes become U+FFFD; the good line after them is intact
+    assert(got.length == 2 && got.head.startsWith("garbage") && got.head.contains('\uFFFD'))
+    assert(got(1) == good)
   }
 
   private def explainOf(q: StreamingQuery): String = {
@@ -162,14 +181,13 @@ class CdcSourceSpec extends SparkSuite {
   test("pkFilters option: patterns OR together; Catalyst conjuncts AND on top") {
     val dir = writeDir()
     // reference rule-array semantics: ["USER#1","ORG#*"] = eq OR prefix
-    val either = spark.read.format(classOf[CdcSource].getName)
-      .option("pkFilters", """["USER#1","ORG#*"]""").load(dir)
-    assert(either.collect().map(_.getAs[String]("eventID")).sorted.toSeq == Seq("d-1", "d-3"))
-    // a Catalyst-pushed conjunct narrows the pattern set, never widens it
+    val either = read(dir, "pkFilters" -> """["USER#1","ORG#*"]""")
+    assert(either.map(eventId).sorted == Seq("d-1", "d-3"))
+    // a Catalyst predicate above the scan narrows the pattern set, never widens it
     val both = spark.read.format(classOf[CdcSource].getName)
       .option("pkFilters", """["USER#1","ORG#*"]""").load(dir)
-      .filter(col("pk").startsWith("USER#"))
-    assert(both.collect().map(_.getAs[String]("eventID")).toSeq == Seq("d-1"))
+      .filter(col("line").contains("\"USER#"))
+    assert(both.collect().map(r => eventId(r.getString(0))).toSeq == Seq("d-1"))
   }
 
   test("micro-batch read: pk filter pushes into the streaming scan") {
@@ -178,19 +196,18 @@ class CdcSourceSpec extends SparkSuite {
     val out = Files.createTempDirectory("graft-dsv2-mb-out").toString
     val ckpt = Files.createTempDirectory("graft-dsv2-mb-ckpt").toString
     // Catalyst doesn't push filters into streaming scans, so source-level
-    // pruning arrives via the pkFilters OPTION; the .filter stays as the
-    // exact residual, like the pipeline does.
+    // pruning arrives via the pkFilters OPTION; the exact check stays with
+    // the record program, as in the pipeline.
     val q = spark.readStream.format(classOf[CdcSource].getName)
       .option("pkFilters", """["USER#*"]""").load(dir)
-      .filter(col("pk").startsWith("USER#"))
       .writeStream.format("parquet").option("path", out)
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
-    val ids = spark.read.parquet(out).select("eventID").collect().map(_.getString(0)).sorted
+    val ids = spark.read.parquet(out).collect().map(r => eventId(r.getString(0))).sorted
     assert(ids.toSeq == Seq("d-1", "d-2"))
     val plan = explainOf(q)
-    assert(plan.contains("StringStartsWith(pk,USER#)"), plan.take(600))
+    assert(plan.contains("pkFilters=[Prefix(USER#)]"), plan.take(600))
   }
 
   test("micro-batch read: only files newer than the committed offset are processed") {
@@ -205,16 +222,16 @@ class CdcSourceSpec extends SparkSuite {
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
+    def got: Seq[String] = spark.read.parquet(out).collect().map(_.getString(0)).toSeq.sorted
     runOnce()
-    assert(spark.read.parquet(out).count() == 3)
+    assert(got == lines.take(3).sorted)
     // a new file arrives; the committed offset keeps a.json from reprocessing
     Files.write(Paths.get(s"$dir/b.json"), lines.drop(3).mkString("\n").getBytes)
     runOnce()
-    val ids = spark.read.parquet(out).select("eventID").collect().map(_.getString(0)).sorted
-    assert(ids.toSeq == Seq("d-1", "d-2", "d-3", "d-5"), ids.mkString(","))
+    assert(got == lines.sorted, got.mkString("\n"))
     // nothing new → third run appends nothing (exactly-once over the offset log)
     runOnce()
-    assert(spark.read.parquet(out).count() == 4)
+    assert(got.length == 5)
   }
 
   test("maxFilesPerTrigger drains a backlog as bounded micro-batches") {
@@ -232,7 +249,7 @@ class CdcSourceSpec extends SparkSuite {
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     // every record arrived exactly once...
-    val ids = spark.read.parquet(out).select("eventID").collect().map(_.getString(0)).sorted
+    val ids = spark.read.parquet(out).collect().map(r => eventId(r.getString(0))).sorted
     assert(ids.toSeq == Seq("d-1", "d-2", "d-3", "d-5"), ids.mkString(","))
     // ...across one micro-batch per file (offsets log batches 0,1,2)
     val batches = new java.io.File(s"$ckpt/offsets").listFiles()
@@ -244,21 +261,5 @@ class CdcSourceSpec extends SparkSuite {
     val o = CdcOffset(Map("/x/a b.json" -> 12L, "/x/b.json" -> 0L))
     assert(CdcOffset.fromJson(o.json()) == o)
     assert(CdcOffset.fromJson("") == CdcOffset(Map.empty))
-  }
-
-  test("source rows feed the CDC pipeline stages unchanged") {
-    import spark.implicits._
-    val df = read(writeDir()).filter(col("eventName") === "MODIFY")
-    val recs = df.select(col("eventID"), col("eventName"), col("sizeBytes"),
-      col("keysJson"), col("newImageJson"), col("oldImageJson"))
-      .as[(String, String, Long, String, String, String)]
-      .map { case (id, op, size, k, n, o) =>
-        graft.cdc.CdcRecord(Some(id), Some(op),
-          Some(graft.cdc.CdcStreamPart(Some(size), Option(k), Option(n), Option(o))))
-      }
-    val out = graft.cdc.CdcPipeline.events(recs,
-      graft.cdc.CdcConfig(eventSource = "dsv2", blobDir = "/tmp/unused")).collect()
-    assert(out.length == 1 && out.head.operation == "MODIFY")
-    assert(out.head.attributesChanged == Seq("v"))
   }
 }
